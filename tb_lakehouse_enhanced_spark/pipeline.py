@@ -8,6 +8,18 @@ functions executed in dependency order; each is idempotent (MERGE
 semantics), so re-running a stage after a failure is safe — the same
 recovery property the reference gets from Databricks job retries.
 
+Within a stage, tables that do not read each other's output run
+concurrently on the shared session (``_each_table``: the 5 bronze
+overwrites, the 3 silver SCD2 merges), one thread per table; the
+stages themselves stay strictly ordered. Each table has its own
+commit log and pointer lock, so no two threads commit to one table.
+What this changes on failure: when one silver table fails its
+expectation gate, its siblings may already have committed their
+merge. That is safe for the same reason retries are — every stage is
+idempotent, and a retry or a ``batch_id`` resume re-runs the whole
+stage. ``metrics[stage]["seconds"]`` is the stage's wall time, over
+tables that overlap, not a sum of per-table times.
+
 Layer mapping onto the driver's testdata (FIXTURES.md):
   orders   -> sales_order_header   customer -> customer dim source
   lineitem -> sales_order_detail   nation/region -> geography
@@ -15,10 +27,13 @@ Layer mapping onto the driver's testdata (FIXTURES.md):
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from typing import Callable, Collection
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .operators.calendar import calendar_spine, date_key
 from .operators.merge import ScdConfig, keyed_upsert, scd1_merge, scd2_merge
@@ -47,6 +62,22 @@ def _mt(spark, cfg: PipelineConfig, layer: str, name: str,
                         partition_by=partition_by)
 
 
+def _each_table(spark: SparkSession, fn: Callable[[str], None],
+                names: Collection[str]) -> None:
+    """Run ``fn(name)`` for every table of a stage at once, one thread
+    per table, and wait for all of them. A lone table's work leaves
+    most cores idle through its driver/py4j round trips; its siblings'
+    jobs fill them. Each call is wrapped where it is submitted, so it
+    runs with its own copy of the caller's job group and local
+    properties. The first failure in table order is re-raised, after
+    every call has finished."""
+    with ThreadPoolExecutor(max_workers=len(names)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn), n)
+                   for n in names]
+    for f in futures:
+        f.result()
+
+
 # ---------------------------------------------------------------- bronze ----
 BRONZE_TABLES = ("orders", "customer", "lineitem", "nation", "region")
 
@@ -57,9 +88,11 @@ def run_bronze(spark: SparkSession, cfg: PipelineConfig) -> None:
     The reference overwrites bronze from JDBC each run; we overwrite
     from the parquet source adapter through the same interface.
     """
-    for name in BRONZE_TABLES:
+    def ingest(name: str) -> None:
         _mt(spark, cfg, "bronze", name).overwrite(
             load_table(spark, cfg.sf_dir, name))
+
+    _each_table(spark, ingest, BRONZE_TABLES)
 
 
 # ---------------------------------------------------------------- silver ----
@@ -117,7 +150,9 @@ def run_silver(spark: SparkSession, cfg: PipelineConfig) -> None:
     gated on data-quality expectations (non-null natural keys — a NULL
     key would silently full-outer-join into its own version chain)."""
     from .operators.analytics import enforce_expectations
-    for name, spec in SILVER_SPECS.items():
+
+    def load(name: str) -> None:
+        spec = SILVER_SPECS[name]
         src = _silver_source(spark, cfg, name)
         if cfg.expect_action:
             rules = [(f"null_{k}", F.col(k).isNull())
@@ -129,6 +164,8 @@ def run_silver(spark: SparkSession, cfg: PipelineConfig) -> None:
         mt = _mt(spark, cfg, "silver", name,
                  partition_by=("_tf_is_current",))
         mt.scd2_merge_into(src, spec["cfg"], cfg.load_ts)
+
+    _each_table(spark, load, SILVER_SPECS)
 
 
 # ------------------------------------------------------------------ gold ----
@@ -290,7 +327,8 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig,
     from Databricks job retries). Data-quality failures
     (:class:`~.operators.analytics.ExpectationError`) are deterministic
     and never retried. ``metrics``: caller-supplied dict that receives
-    per-stage wall seconds and attempt counts.
+    per-stage wall seconds and attempt counts (a stage's seconds are
+    its wall time; its tables run concurrently, see ``_each_table``).
 
     ``batch_id``: enables crash-safe RESUME. Each completed stage is
     recorded in an atomically-written run ledger under

@@ -53,6 +53,13 @@ def get_session(app_name: str = "tb-lakehouse-enhanced-spark",
         # aggregate plans) gets paid on every re-run
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # list partition dirs on the driver: past the default 32 paths
+        # Spark lists them in a Spark job of one task per dir, and every
+        # read of a materialized version of a table with more leaf dirs
+        # than that (the 44-month gold fact) paid a ~0.25 s listing job
+        # for what is a few milliseconds of local directory reads
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "1024")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
@@ -100,47 +107,3 @@ def get_session(app_name: str = "tb-lakehouse-enhanced-spark",
     )
     return builder.getOrCreate()
 
-
-def cluster_conf(total_cores: int = 1000 * 8,
-                 executor_mem_gb: int = 32,
-                 daily_tb: float = 100.0) -> dict[str, str]:
-    """Recommended conf for the 1000-executor deployment this engine is
-    designed for — the settings that change between local[32] and a real
-    cluster, each derived from a sizing rule rather than folklore:
-
-    - shuffle.partitions ~ 2x total cores: enough tasks that one wave of
-      stragglers doesn't idle the cluster; AQE coalesces the small tail
-      so over-partitioning costs nothing at runtime.
-    - maxPartitionBytes 256 MB: scan tasks sized so ~daily_tb/256MB input
-      splits keep every core busy for minutes, not seconds (task
-      scheduling overhead amortized), while a split still fits executor
-      memory alongside shuffle buffers.
-    - autoBroadcastJoinThreshold 256 MB with 32 GB executors: a hashed
-      relation ~5x its on-disk size still leaves >25 GB working memory;
-      the growing dims in this engine are UNHINTED precisely so this
-      threshold (not code) decides broadcast vs shuffle per deployment.
-    - AQE skew-join thresholds at their defaults: the engine already
-      salts the known-skew paths (operators/skew.py); AQE catches the
-      rest at runtime.
-    - shuffle spill compression on (lz4): at 100 TB the shuffle is
-      network-bound before it is CPU-bound.
-
-    Returned as a dict so deploy tooling can merge it into any
-    submit mechanism (spark-submit --conf, job clusters, k8s operator).
-    """
-    return {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.shuffle.partitions": str(2 * total_cores),
-        "spark.sql.files.maxPartitionBytes": str(256 * 1024 * 1024),
-        "spark.sql.autoBroadcastJoinThreshold": str(256 * 1024 * 1024),
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.parquet.filterPushdown": "true",
-        "spark.shuffle.compress": "true",
-        "spark.io.compression.codec": "lz4",
-        "spark.sql.codegen.cache.maxEntries": "2000",
-        "spark.executor.memory": f"{executor_mem_gb}g",
-        "spark.memory.fraction": "0.6",
-    }

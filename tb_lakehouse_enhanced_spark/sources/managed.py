@@ -104,6 +104,12 @@ _PLAIN_STRING_PARTVAL = _re_mod.compile(
     r"^(?!(?:NaN|Infinity)$)[A-Za-z][A-Za-z0-9_]*$")
 
 
+# the characters Spark's ExternalCatalogUtils.escapePathName writes as
+# %XX in a partition dir name (non-Windows set; unicode stays raw)
+_HIVE_ESCAPED = frozenset(
+    [chr(c) for c in range(0x01, 0x20)] + list("\"#%'*/:=?\\\x7f{[]^"))
+
+
 def empty_local_df(spark: SparkSession, schema) -> DataFrame:
     """A zero-row DataFrame with ``schema``'s names and types as a
     LOCAL relation. ``spark.createDataFrame([], schema)`` builds a
@@ -5614,9 +5620,15 @@ class ManagedTable:
 
     @staticmethod
     def _hive_val(v) -> str:
-        if v is None:
+        """A partition value as the leaf-dir segment Spark writes for
+        it (``ExternalCatalogUtils.getPartitionPathString``): NULL and
+        the empty string are the default partition, everything else
+        goes through ``escapePathName`` — ``a:b`` lives in
+        ``col=a%3Ab``, so a raw ``str(v)`` would miss the dir."""
+        if v is None or v == "":
             return "__HIVE_DEFAULT_PARTITION__"
-        return str(v)
+        return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPED else c
+                       for c in str(v))
 
     @staticmethod
     def _staged_dir_name(v: int) -> str:
@@ -5632,21 +5644,6 @@ class ManagedTable:
         batch dirs)."""
         import uuid
         return f"v{v}-r{uuid.uuid4().hex[:8]}"
-
-    @staticmethod
-    def _leaf_partition_dirs(root: str, depth: int) -> list[str]:
-        """Relative ``col=value[/col=value...]`` paths at ``depth``."""
-        out, stack = [], [("", 0)]
-        while stack:
-            rel, d = stack.pop()
-            full = os.path.join(root, rel) if rel else root
-            if d == depth:
-                out.append(rel)
-                continue
-            for name in os.listdir(full):
-                if "=" in name and os.path.isdir(os.path.join(full, name)):
-                    stack.append((os.path.join(rel, name) if rel else name, d + 1))
-        return out
 
     def _publish_partition_scoped(self, v: int, meta: dict, vdir: str,
                                   touched_rel: set[str],

@@ -2,11 +2,13 @@
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
 from tb_lakehouse_enhanced_spark.pipeline import (
-    PipelineConfig, run_pipeline,
+    SILVER_SPECS, PipelineConfig, run_pipeline,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -150,3 +152,145 @@ def test_pipeline_resume_skips_completed_stages(spark, tmp_path):
     metrics3: dict = {}
     run_pipeline(spark, cfg, metrics=metrics3, batch_id="b2")
     assert all(not v.get("skipped") for v in metrics3.values())
+
+
+@contextlib.contextmanager
+def _job_group(sc, group: str):
+    """Run the body under Spark job group ``group``."""
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_bronze_tables_inherit_callers_job_group(spark, tmp_path):
+    """The bronze tables run on worker threads; every job they launch
+    must still carry the caller's job group (one overwrite per table,
+    so at least five jobs)."""
+    from tb_lakehouse_enhanced_spark.pipeline import BRONZE_TABLES, run_bronze
+    sc = spark.sparkContext
+    cfg = PipelineConfig(sf_dir=SF_DIR, base_dir=str(tmp_path / "lake"))
+    with _job_group(sc, "pipeline-bronze-group"):
+        run_bronze(spark, cfg)
+    jobs = sc.statusTracker().getJobIdsForGroup("pipeline-bronze-group")
+    assert len(jobs) >= len(BRONZE_TABLES) == 5
+
+
+class _SilverBoom(RuntimeError):
+    pass
+
+
+def _fail_one_silver_table(monkeypatch, failing: str):
+    from tb_lakehouse_enhanced_spark import pipeline as P
+    real = P._silver_source
+
+    def source(spark_, cfg_, name):
+        if name == failing:
+            raise _SilverBoom(name)
+        return real(spark_, cfg_, name)
+    monkeypatch.setattr(P, "_silver_source", source)
+
+
+def test_silver_table_failure_fails_the_stage(spark, tmp_path, monkeypatch):
+    """One silver table raising while its siblings succeed: the stage
+    re-raises that error, its siblings have committed, and the ledger
+    does not record the stage as done."""
+    from tb_lakehouse_enhanced_spark import pipeline as P
+    from tb_lakehouse_enhanced_spark.sources.managed import ManagedTable
+    cfg = PipelineConfig(sf_dir=SF_DIR, base_dir=str(tmp_path / "lake"))
+    _fail_one_silver_table(monkeypatch, "customer")
+    with pytest.raises(_SilverBoom, match="customer"):
+        run_pipeline(spark, cfg, batch_id="b1")
+    assert P._ledger_read(cfg, "b1") == ["run_bronze"]
+    for name in ("sales_order_header", "sales_order_detail"):
+        assert ManagedTable(spark, f"{cfg.base_dir}/silver/{name}").exists()
+    assert not ManagedTable(spark, f"{cfg.base_dir}/silver/customer").exists()
+
+
+def test_resume_after_silver_failure_matches_uninterrupted_run(
+        spark, tables, tmp_path, monkeypatch):
+    """Resuming a batch whose silver stage failed part-way (two of
+    three tables committed) re-runs the whole stage and converges to
+    the silver contents of an uninterrupted run."""
+    from tb_lakehouse_enhanced_spark.sources.managed import ManagedTable
+    full_cfg, _ = tables
+    cfg = PipelineConfig(sf_dir=SF_DIR, base_dir=str(tmp_path / "lake"))
+    with monkeypatch.context() as m:
+        _fail_one_silver_table(m, "sales_order_detail")
+        with pytest.raises(_SilverBoom):
+            run_pipeline(spark, cfg, batch_id="b1")
+    metrics: dict = {}
+    run_pipeline(spark, cfg, metrics=metrics, batch_id="b1")
+    assert metrics["run_bronze"].get("skipped") is True
+    assert metrics["run_silver"]["attempts"] == 1
+
+    def rows(base, name):
+        df = ManagedTable(spark, f"{base}/silver/{name}").read()
+        return sorted(tuple(r) for r in
+                      df.select(*sorted(df.columns)).collect())
+    for name in SILVER_SPECS:
+        assert rows(cfg.base_dir, name) == rows(full_cfg.base_dir, name), name
+
+
+def test_each_table_waits_for_all_then_raises_first_in_table_order(spark):
+    """The later-named table fails first in time; the earlier-named
+    failure is the one raised, and every sibling ran to completion."""
+    import time
+
+    from tb_lakehouse_enhanced_spark.pipeline import _each_table
+    done: list[str] = []
+
+    def fn(name):
+        if name == "b":
+            time.sleep(0.3)
+            raise ValueError(name)
+        if name == "d":
+            raise ValueError(name)
+        time.sleep(0.1)
+        done.append(name)
+    with pytest.raises(ValueError, match="^b$"):
+        _each_table(spark, fn, "abcde")
+    assert sorted(done) == ["a", "c", "e"]
+
+
+def test_each_table_stress_more_threads_than_cores(spark, tmp_path):
+    """Twelve concurrent overwrites of distinct tables share the
+    session and its schema caches; each table must read back exactly
+    its own rows (a lost or crossed update would break that)."""
+    import sys
+    import threading
+
+    from tb_lakehouse_enhanced_spark.pipeline import _each_table
+    from tb_lakehouse_enhanced_spark.sources.managed import ManagedTable
+    names = [f"t{i}" for i in range(12)]
+
+    def bounds(name):
+        i = int(name[1:])
+        return i * 100, i * 100 + 10 + i
+
+    def write(name):
+        ManagedTable(spark, f"{tmp_path}/{name}").overwrite(
+            spark.range(*bounds(name)))
+
+    errors: list[BaseException] = []
+
+    def run():
+        try:
+            _each_table(spark, write, names)
+        except BaseException as e:  # surfaced by the assert below
+            errors.append(e)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        t = threading.Thread(target=run)
+        t.start()
+        t.join(300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not t.is_alive() and errors == []
+    for name in names:
+        got = sorted(r.id for r in
+                     ManagedTable(spark, f"{tmp_path}/{name}").read().collect())
+        assert got == list(range(*bounds(name))), name
