@@ -130,10 +130,3 @@ def logistic_fit_reference(X, y, iters: int = 8, ridge: float = 1e-6):
     w = beta[1:] / sd
     b0 = beta[0] - float((beta[1:] * mu / sd).sum())
     return b0, w
-
-
-def _stable_logit_nll(eta, y):
-    """Reference helper: numerically stable mean NLL."""
-    import numpy as np
-    return float(np.mean(np.log1p(np.exp(-eta)) * y
-                         + np.log1p(np.exp(eta)) * (1 - y)))

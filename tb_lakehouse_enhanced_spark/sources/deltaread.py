@@ -45,6 +45,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,6 +61,30 @@ def _commit_versions(path: str) -> list[int]:
         int(os.path.basename(f).split(".")[0])
         for f in glob.glob(os.path.join(_log_dir(path), "*.json"))
         if os.path.basename(f).split(".")[0].isdigit())
+
+
+def path_uri(rel: str) -> str:
+    """An action's ``path`` for a table-relative file path. PROTOCOL.md
+    makes it a URI (RFC 2396) that readers decode, so a hive-escaped
+    partition dir such as ``region=a%3Ab`` is written
+    ``region=a%253Ab``."""
+    return urllib.parse.quote(rel, safe="/=")
+
+
+def url_decoded(c):
+    """Column ``c`` with one layer of %XX escapes decoded; a literal
+    '+' is protected first (``url_decode`` would read it as a space).
+    Values without a '%' skip the decode."""
+    return F.when(c.contains("%"), F.url_decode(
+        F.regexp_replace(c, r"\+", "%2B"))).otherwise(c)
+
+
+def scan_file_path():
+    """A scan's ``_metadata.file_path`` as the plain local path: the
+    column is a URI, so the scheme is stripped and its %XX escapes are
+    decoded. Must be applied on the scan relation."""
+    return url_decoded(F.regexp_replace(
+        F.col("_metadata.file_path"), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"))
 
 
 def _load_checkpoint(spark: SparkSession, path: str,
@@ -99,7 +124,7 @@ def _load_checkpoint(spark: SparkSession, path: str,
     for r in rows:
         d = r.asDict(recursive=True)
         if d.get("add"):
-            adds[d["add"]["path"]] = d["add"]
+            adds[urllib.parse.unquote(d["add"]["path"])] = d["add"]
         if d.get("metaData") and d["metaData"].get("id"):
             meta = d["metaData"]
         if d.get("protocol") and d["protocol"].get("minReaderVersion"):
@@ -109,12 +134,12 @@ def _load_checkpoint(spark: SparkSession, path: str,
 
 def _replay(spark: SparkSession, path: str,
             version: int | None = None) -> tuple[dict, dict, dict | None]:
-    """Fold the log into (live adds by path, latest metaData, latest
-    protocol). Protocol is LATEST-WINS per the spec: a table that
-    passed through a reader-feature episode (e.g. a merge-on-read
-    delete marked with deletionVectors) and then returned to protocol
-    v1 via a copy-on-write commit is readable again — callers enforce
-    the FINAL protocol, not transient ones."""
+    """Fold the log into (live adds by decoded table-relative file
+    path, latest metaData, latest protocol). Protocol is LATEST-WINS
+    per the spec: a table that passed through a reader-feature episode
+    (e.g. a merge-on-read delete marked with deletionVectors) and then
+    returned to protocol v1 via a copy-on-write commit is readable
+    again — callers enforce the FINAL protocol, not transient ones."""
     adds, meta, proto, cp_v = _load_checkpoint(spark, path, version)
     if adds is None:
         adds, meta, proto = {}, None, None
@@ -134,9 +159,10 @@ def _replay(spark: SparkSession, path: str,
                 if "metaData" in a:
                     meta = a["metaData"]
                 if "remove" in a:
-                    adds.pop(a["remove"]["path"], None)
+                    adds.pop(urllib.parse.unquote(a["remove"]["path"]),
+                             None)
                 if "add" in a:
-                    adds[a["add"]["path"]] = a["add"]
+                    adds[urllib.parse.unquote(a["add"]["path"])] = a["add"]
     if meta is None:
         raise ValueError(f"Delta log at {path} carries no metaData")
     return adds, meta, proto
@@ -255,10 +281,9 @@ def read_delta(spark: SparkSession, path: str,
             from .dvio import load_dv
             ap = os.path.abspath(os.path.join(path, p))
             dv_dead += [(ap, int(pos)) for pos in load_dv(path, dvd)]
-    # normalize the scan's file URI (file:/x, file:///x, hdfs://nn/x)
-    # down to the plain path so it matches the log-derived abspath
-    norm = F.regexp_replace(F.col("_metadata.file_path"),
-                            "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
+    # the scan's file URI (file:/x, file:///x, hdfs://nn/x) as the
+    # plain path, to match the log-derived abspath
+    norm = scan_file_path()
     if dv_dead or part_cols:
         # _metadata resolves only on the scan relation — materialize
         # the normalized path (and row index) before any join
@@ -318,7 +343,7 @@ def checkpoint_delta_log(spark: SparkSession, path: str,
             if head in dir_rewrites and rest:
                 np = f"{dir_rewrites[head]}/{rest}"
                 if os.path.exists(os.path.join(path, np)):
-                    a = {**a, "path": np}
+                    a = {**a, "path": path_uri(np)}
                     p = np
             rewritten[p] = a
         adds = rewritten

@@ -1573,9 +1573,8 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
                  _SF("_ice_seq", LongType(), True)]
                 + [_SF(f"_ice_p{fid}", _Str(), True)
                    for fid in part_fids]))
-        norm = F.regexp_replace(F.col("_metadata.file_path"),
-                                "^[a-zA-Z0-9.+-]+:/+", "/")
-        df = df.withColumn("_ice_fp", norm)
+        from .deltaread import scan_file_path
+        df = df.withColumn("_ice_fp", scan_file_path())
         if pos_deletes:
             # row position per file, for position-delete application
             df = df.withColumn("_ice_pos",

@@ -38,11 +38,14 @@ import json
 import os
 import shutil
 import time
+import urllib.parse
+from contextlib import contextmanager
 from functools import reduce
 from operator import and_, or_
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .deltaread import path_uri, scan_file_path, url_decoded
 from .logstore import CommitStore, get_commit_store
 
 
@@ -92,6 +95,30 @@ def _assert_castable(df: DataFrame, checks: list, ctx: str) -> None:
             f"corrupted keys")
 
 
+@contextmanager
+def materialized_source(df: DataFrame):
+    """``df`` evaluated once for the statement that consumes it, the
+    role Delta's MergeIntoMaterializeSource plays for MERGE.
+
+    A MERGE/upsert source has several consumers inside one statement:
+    the touched-partition collect, the cardinality or cast check, the
+    slice write (often two stages), the carry and the OCC conflict
+    check. Re-planned per consumer, a driver-side batch crosses into
+    Python workers once per consumer, and a source that reads an
+    external feed can answer each consumer with different rows (keys
+    that only a later evaluation returns get inserted next to the
+    hardlinked old copies as duplicates). A lazy local checkpoint pins
+    the first evaluation: the first job that reads it fills its blocks
+    (no extra job), every later consumer reads those blocks. The
+    blocks stay registered in ``getPersistentRDDs()`` until released,
+    so the statement releases them on exit, success or not."""
+    cp = df.localCheckpoint(eager=False)
+    try:
+        yield cp
+    finally:
+        cp._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 import re as _re_mod
 
 # a hive partition-path value that Spark's partition type inference can
@@ -102,6 +129,27 @@ import re as _re_mod
 # Used to pre-seed partitioned root schemas.
 _PLAIN_STRING_PARTVAL = _re_mod.compile(
     r"^(?!(?:NaN|Infinity)$)[A-Za-z][A-Za-z0-9_]*$")
+_INT_PARTVAL = _re_mod.compile(r"^-?[0-9]+$")
+
+
+def _inferred_partition_type(values: set[str]):
+    """The type Spark's partition type inference gives a column whose
+    non-null hive dir values are ``values``, or None where this cannot
+    tell without running it. Spark tries int, then long, per value and
+    widens across values, so all-integral values are IntegerType when
+    each fits int32 and LongType when each fits int64."""
+    from pyspark.sql.types import IntegerType, LongType, StringType
+    if not values:
+        return None
+    if all(_PLAIN_STRING_PARTVAL.match(x) for x in values):
+        return StringType()
+    if all(_INT_PARTVAL.match(x) for x in values):
+        ints = [int(x) for x in values]
+        if all(-2 ** 31 <= i < 2 ** 31 for i in ints):
+            return IntegerType()
+        if all(-2 ** 63 <= i < 2 ** 63 for i in ints):
+            return LongType()
+    return None
 
 
 # the characters Spark's ExternalCatalogUtils.escapePathName writes as
@@ -707,13 +755,10 @@ class ManagedTable:
                 F.col("_metadata.file_path"),
                 root_re + r"/[^/]+/(?:[^/]+/)*?"
                 + _re.escape(f.name) + r"=([^/]+)/", 1)
-            # hive escapes special chars as %XX in path segments;
-            # protect literal '+' (url_decode would turn it into a
-            # space) then decode — a no-op for the common plain values
-            seg = F.when(
-                raw.contains("%"),
-                F.url_decode(F.regexp_replace(raw, r"\+", "%2B"))
-            ).otherwise(raw)
+            # two %XX layers: the file path is a URI, and hive escapes
+            # special chars in the dir name below it (a%3Ab is written
+            # a%253Ab in the URI)
+            seg = url_decoded(url_decoded(raw))
             df = df.withColumn(f.name, F.when(
                 seg == "", F.col(f.name)).when(
                 seg == "__HIVE_DEFAULT_PARTITION__",
@@ -841,8 +886,9 @@ class ManagedTable:
         the cache must outlive the instance to actually hit on the
         serving path (measured ~42 ms/miss of driver/py4j work,
         8 misses per evolved_mor_dml rep). The ROOT schema underneath
-        has its own (path, root) cache tier, SEEDED at write time for
-        unpartitioned roots (``_seed_root_schema``) — the writer knows
+        has its own (path, root) cache tier, SEEDED at write time
+        where the written schema and partition values determine it
+        (``_seed_root_schema``) — the writer knows
         the schema it just wrote, so the first read after a commit
         skips footer inference entirely."""
         from pyspark.sql.types import _parse_datatype_string
@@ -903,12 +949,12 @@ class ManagedTable:
         every written type provably round-trips parquet write->infer
         identically (``_parquet_roundtrip_schema``). Partition-column
         types are inferred from the PATH VALUES at scan time, so a
-        partitioned root seeds only when every hive segment value the
-        write produced is letters-only (provably StringType under
-        Spark's partition type inference — cannot parse as
-        int/long/double/decimal/date/timestamp) — the one local dir
-        walk mirrors ``_ensure_readable``'s; anything else keeps the
-        inference path."""
+        partitioned root seeds only when every partition column's
+        values have a type ``_inferred_partition_type`` can name
+        (letters-only -> string, integral -> int or long; the hive
+        NULL sentinel stays null and widens to either) — the one local
+        dir walk mirrors ``_ensure_readable``'s; anything else keeps
+        the inference path."""
         clean = _parquet_roundtrip_schema(written_schema)
         if clean is None:
             return
@@ -916,24 +962,32 @@ class ManagedTable:
             from pyspark.sql.types import StringType, StructField
             from pyspark.sql.types import StructType as _ST
             vdir = os.path.join(self.path, root)
-            seen: dict[str, int] = {}
+            seen: dict[str, set] = {}
             for r, dirs, _files in os.walk(vdir):
                 for d in dirs:
                     if "=" not in d:
                         continue
                     col, _, val = d.partition("=")
-                    if not _PLAIN_STRING_PARTVAL.match(val):
-                        return
-                    seen[col] = seen.get(col, 0) + 1
+                    seen.setdefault(col, set()).add(val)
             # every partition column must actually appear (a zero-row
             # write parks a flat schema file instead — inference there
             # keeps partition cols as data columns in df order)
             if set(seen) != set(self.partition_by):
                 return
+            types = {c: _inferred_partition_type(
+                vals - {"__HIVE_DEFAULT_PARTITION__"})
+                for c, vals in seen.items()}
+            if None in types.values():
+                return
+            if any(not isinstance(t, StringType) for t in types.values()) \
+                    and self.spark.conf.get(
+                        "spark.sql.sources.partitionColumnTypeInference"
+                        ".enabled", "true").lower() == "false":
+                return      # inference off: every value reads as string
             clean = _ST(
                 [f for f in clean.fields
                  if f.name not in self.partition_by]
-                + [StructField(p, StringType(), True)
+                + [StructField(p, types[p], True)
                    for p in self.partition_by])
         cache = getattr(self.spark, "_tb_root_schema_cache", None)
         if cache is None:
@@ -1289,8 +1343,7 @@ class ManagedTable:
                    (meta.get("column_map") or [])}
         keys = [phys_of.get(k, k) for k in meta["tombstone_keys"]]
         df = self._base_scan(v, meta)
-        norm = F.regexp_replace(F.col("_metadata.file_path"),
-                                "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
+        norm = scan_file_path()
         base_rows = df.select(
             *[F.col(k) for k in keys], norm.alias("_dv_fp"),
             F.col("_metadata.row_index").alias("_dv_pos"),
@@ -1430,17 +1483,14 @@ class ManagedTable:
                 raise ValueError(
                     f"MOR upsert source columns {sorted(source.columns)}"
                     f" != table columns {sorted(logical)}")
-            batch = source.select(*[
-                _aligned(lg, source.schema[lg], p)
-                for p, lg, _t in cmap])
+            cols = [_aligned(lg, source.schema[lg], p)
+                    for p, lg, _t in cmap]
         else:
             if set(source.columns) != set(btypes):
                 raise ValueError(
                     f"MOR upsert source columns {sorted(source.columns)}"
                     f" != table columns {sorted(btypes)}")
-            batch = source.select(*[
-                _aligned(c, source.schema[c], c) for c in btypes])
-        _assert_castable(source, cast_checks, "MOR upsert")
+            cols = [_aligned(c, source.schema[c], c) for c in btypes]
         import uuid
         v = cur + 1
         # writer-UNIQUE state dir (like append's batch dirs): two
@@ -1448,8 +1498,11 @@ class ManagedTable:
         # the resolution sequence parses from the `delta_v{N}` prefix
         # and ignores the suffix
         delta_dir = f"delta_v{v}-m{uuid.uuid4().hex[:8]}"
-        (self._stamp_field_ids(batch, cmap).write.mode("overwrite")
-         .parquet(os.path.join(self.path, delta_dir)))
+        with materialized_source(source) as src:
+            _assert_castable(src, cast_checks, "MOR upsert")
+            batch = src.select(*cols)
+            (self._stamp_field_ids(batch, cmap).write.mode("overwrite")
+             .parquet(os.path.join(self.path, delta_dir)))
         deltas = list(parent.get("deltas") or []) + [delta_dir]
         meta = {"version": v, "dir": parent["dir"],
                 "op": "UPSERT (merge-on-read)", "ts": time.time(),
@@ -1609,12 +1662,13 @@ class ManagedTable:
                 c = c.cast(btypes[p])
             return c.alias(p)
         _exprs = [_kcol(k) for k in key_cols]
-        _assert_castable(keys_df, cast_checks, "MOR delete-by-keys")
-        (self._stamp_field_ids(
-            keys_df.select(*key_cols).dropDuplicates(list(key_cols))
-            .select(*_exprs), cmap)
-         .write.mode("overwrite")
-         .parquet(os.path.join(self.path, tomb_dir)))
+        with materialized_source(keys_df) as src:
+            _assert_castable(src, cast_checks, "MOR delete-by-keys")
+            (self._stamp_field_ids(
+                src.select(*key_cols).dropDuplicates(list(key_cols))
+                .select(*_exprs), cmap)
+             .write.mode("overwrite")
+             .parquet(os.path.join(self.path, tomb_dir)))
         tombs = list(parent.get("tombstones") or []) + [tomb_dir]
         meta = {"version": v, "dir": parent["dir"],
                 "op": "DELETE (merge-on-read)", "ts": time.time(),
@@ -2033,12 +2087,15 @@ class ManagedTable:
     @staticmethod
     def _partition_values(rel_path: str) -> dict:
         """Delta partitionValues map from hive-style path segments
-        (string-encoded per the protocol; hive's NULL sentinel -> null)."""
+        (string-encoded per the protocol, %XX escapes decoded; hive's
+        NULL sentinel -> null)."""
         vals = {}
         for seg in rel_path.split(os.sep)[1:-1]:  # skip vN/ and filename
             if "=" in seg:
                 k, _, val = seg.partition("=")
-                vals[k] = None if val == "__HIVE_DEFAULT_PARTITION__" else val
+                vals[urllib.parse.unquote(k)] = (
+                    None if val == "__HIVE_DEFAULT_PARTITION__"
+                    else urllib.parse.unquote(val))
         return vals
 
     def _physical_struct(self, files: list[tuple[str, str]]):
@@ -2303,7 +2360,7 @@ class ManagedTable:
                 p = f"{meta['dir']}/{rel}"
                 st = os.stat(os.path.join(self.path, p))
                 actions.append({"add": {
-                    "path": p,
+                    "path": path_uri(p),
                     "partitionValues": self._partition_values(p),
                     "size": st.st_size,
                     "modificationTime": int(st.st_mtime * 1000),
@@ -2345,7 +2402,7 @@ class ManagedTable:
                 return any(inside.startswith(t + "/") for t in touched)
             for rel in sorted(p for p in live if _in_touched(p)):
                 actions.append({"remove": {
-                    "path": rel, "deletionTimestamp": ts_ms,
+                    "path": path_uri(rel), "deletionTimestamp": ts_ms,
                     "dataChange": True}})
             for t_rel in touched:
                 d = os.path.join(self.path, meta["dir"], t_rel)
@@ -2359,7 +2416,7 @@ class ManagedTable:
                         rel = os.path.relpath(full, self.path)
                         st = os.stat(full)
                         actions.append({"add": {
-                            "path": rel,
+                            "path": path_uri(rel),
                             "partitionValues": self._partition_values(rel),
                             "size": st.st_size,
                             "modificationTime": int(st.st_mtime * 1000),
@@ -2382,7 +2439,7 @@ class ManagedTable:
                         rel = os.path.relpath(full, self.path)
                         st = os.stat(full)
                         actions.append({"add": {
-                            "path": rel,
+                            "path": path_uri(rel),
                             "partitionValues": self._partition_values(rel),
                             "size": st.st_size,
                             "modificationTime": int(st.st_mtime * 1000),
@@ -2391,7 +2448,7 @@ class ManagedTable:
                 for rel, full in self._data_files(meta["cdc"]):
                     st = os.stat(full)
                     actions.append({"cdc": {
-                        "path": rel, "partitionValues": {},
+                        "path": path_uri(rel), "partitionValues": {},
                         "size": st.st_size, "dataChange": False}})
             entry = os.path.join(log_dir, f"{v:020d}.json")
             tmp = entry + ".tmp"
@@ -2456,12 +2513,12 @@ class ManagedTable:
                 live = sorted(self._live_files(v - 1))
             for rel in live:
                 actions.append({"remove": {
-                    "path": rel, "deletionTimestamp": ts_ms,
+                    "path": path_uri(rel), "deletionTimestamp": ts_ms,
                     "dataChange": True}})
         for rel, full in files:
             st = os.stat(full)
             actions.append({"add": {
-                "path": rel,
+                "path": path_uri(rel),
                 "partitionValues": self._partition_values(rel),
                 "size": st.st_size,
                 "modificationTime": int(st.st_mtime * 1000),
@@ -2473,7 +2530,7 @@ class ManagedTable:
             for rel, full in self._data_files(meta["cdc"]):
                 st = os.stat(full)
                 actions.append({"cdc": {
-                    "path": rel, "partitionValues": {},
+                    "path": path_uri(rel), "partitionValues": {},
                     "size": st.st_size, "dataChange": False}})
         entry = os.path.join(log_dir, f"{v:020d}.json")
         tmp = entry + ".tmp"
@@ -2572,7 +2629,7 @@ class ManagedTable:
         for rel in sorted(prev_live):
             if rel not in current:
                 actions.append({"remove": {
-                    "path": rel, "deletionTimestamp": ts_ms,
+                    "path": path_uri(rel), "deletionTimestamp": ts_ms,
                     "dataChange": True}})
         for rel, full in current.items():
             prev = prev_live.get(rel)
@@ -2580,7 +2637,7 @@ class ManagedTable:
                     and not prev.get("deletionVector"):
                 continue    # unchanged live add: replay keeps it
             st = os.stat(full)
-            add = {"path": rel,
+            add = {"path": path_uri(rel),
                    "partitionValues": self._partition_values(rel),
                    "size": st.st_size,
                    "modificationTime": int(st.st_mtime * 1000),
@@ -3810,13 +3867,10 @@ class ManagedTable:
 
         def part_val(seg, dtype):
             # typed partition value exactly as the aggregate path
-            # would produce it post-_norm_stat
-            import urllib.parse
+            # would produce it post-_norm_stat (``seg`` is unescaped)
             tn = dtype.typeName()
             if seg is None:
                 return None
-            if "%" in seg:
-                seg = urllib.parse.unquote(seg.replace("+", "%2B"))
             if tn in ("integer", "long", "short", "byte",
                       "double", "float"):
                 return float(seg)
@@ -4979,10 +5033,12 @@ class ManagedTable:
         Returns None — caller falls back to the scan probe — when the
         predicate references non-partition columns, when any live file
         predates the current partition layout (its value lives in the
-        file, not the path), or when local evaluation fails. Under MOR
-        the result is a SUPERSET of the resolved probe (a fully-
-        tombstoned partition still lists); the caller re-probes the
-        pruned slice for exactness."""
+        file, not the path), when the commit carries merge-on-read
+        deltas (an upserted row can open a partition no base file
+        lists), or when local evaluation fails. Under MOR the result
+        is a SUPERSET of the resolved probe (a fully-tombstoned
+        partition still lists); the caller re-probes the pruned slice
+        for exactness."""
         from pyspark.sql import functions as F
         from pyspark.sql.types import StringType, StructField, StructType
         pb = list(self.partition_by)
@@ -4991,7 +5047,8 @@ class ManagedTable:
         # BEFORE the filter attempt, so the common fallback never
         # raises (and never logs) through the JVM analyzer
         refs = self._condition_refs(condition)
-        if refs is None or not refs <= {c.lower() for c in pb}:
+        if refs is None or not refs <= {c.lower() for c in pb} \
+                or meta0.get("deltas"):
             return None
         raw: set[tuple] = set()
         for rel in self._files_rel(cur):
@@ -5028,12 +5085,8 @@ class ManagedTable:
             typed = sdf.select(*[
                 F.when(F.col(f"c{i}") == "__HIVE_DEFAULT_PARTITION__",
                        F.lit(None).cast(fields[c].dataType))
-                .otherwise(
-                    F.when(F.col(f"c{i}").contains("%"),
-                           F.url_decode(F.regexp_replace(
-                               F.col(f"c{i}"), r"\+", "%2B")))
-                    .otherwise(F.col(f"c{i}"))
-                    .cast(fields[c].dataType))
+                .otherwise(url_decoded(F.col(f"c{i}"))
+                           .cast(fields[c].dataType))
                 .alias(c) for i, c in enumerate(pb)])
             # dedupe typed tuples driver-side (.distinct() would plan
             # a real shuffle job)
@@ -5813,6 +5866,18 @@ class ManagedTable:
                     f"managed table {self.path} does not exist")
             return self.overwrite(bootstrap(source), operation,
                                   extra_meta=extra_meta)
+        with materialized_source(source) as src:
+            return self._merge_into_existing(
+                src, combine, operation, keys, stable_partitions,
+                extra_meta, occ_retry)
+
+    def _merge_into_existing(self, source: DataFrame, combine,
+                             operation: str, keys: list | None,
+                             stable_partitions: bool,
+                             extra_meta: dict | None,
+                             occ_retry: bool) -> "ManagedTable":
+        """``merge_into_generic`` on an existing table, with ``source``
+        already materialized for the statement."""
         # merge-on-read parent: untouched partitions would hardlink
         # UNRESOLVED base files (resurrecting tombstoned rows, dropping
         # delta upserts). With ``stable_partitions=True`` the merge

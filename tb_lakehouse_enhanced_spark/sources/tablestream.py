@@ -49,6 +49,7 @@ from __future__ import annotations
 
 import json
 import os
+import urllib.parse
 
 from pyspark.sql.datasource import (
     DataSource, DataSourceStreamReader, InputPartition,
@@ -141,21 +142,16 @@ def _files_rel(path: str, meta: dict, partitioned: bool) -> dict[str, str]:
     return out
 
 
-def _part_values(abs_path: str, vdir: str) -> dict:
-    """Hive ``col=value`` string values on the file's path below the
-    version dir (None for the hive null sentinel)."""
-    return _part_values_rel(os.path.relpath(abs_path, vdir))
-
-
 def _part_values_rel(rel: str) -> dict:
-    """Hive ``col=value`` string values from a path RELATIVE to its
-    version dir — safe for live sets spanning version dirs, where no
-    single vdir is an ancestor of every file."""
+    """Hive ``col=value`` string values (%XX escapes decoded) from a
+    path RELATIVE to its version dir — safe for live sets spanning
+    version dirs, where no single vdir is an ancestor of every file."""
     vals: dict[str, str | None] = {}
     for seg in rel.split(os.sep)[:-1]:
         if "=" in seg:
             k, _, val = seg.partition("=")
-            vals[k] = None if val == _HIVE_NULL else val
+            vals[urllib.parse.unquote(k)] = None if val == _HIVE_NULL \
+                else urllib.parse.unquote(val)
     return vals
 
 

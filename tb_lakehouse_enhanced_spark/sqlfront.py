@@ -57,7 +57,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sources.managed import ManagedTable, empty_local_df
+from .sources.managed import (
+    ManagedTable,
+    empty_local_df,
+    materialized_source,
+)
 
 __all__ = ["LakehouseSql", "MergeSpec", "MergeClause",
            "parse_merge", "parse_update", "parse_delete", "parse_insert",
@@ -2356,9 +2360,11 @@ class LakehouseSql:
                     # lost race must not rebase (see _insert's
                     # occ_retry note)
                     occ_retry=not needs_ident)
-            return tbl.overwrite(combine(target, source),
-                                 operation="MERGE",
-                                 extra_meta=extra_meta)
+            # the partition-scoped route materializes its own source
+            with materialized_source(source) as src:
+                return tbl.overwrite(combine(target, src),
+                                     operation="MERGE",
+                                     extra_meta=extra_meta)
         finally:
             for df in pin:
                 df.unpersist()
@@ -2454,84 +2460,87 @@ class LakehouseSql:
             # uniqueness (the window verdict folds per key); duplicate
             # keys fall back to sequential composition below, which
             # applies the relaxed matched-only guard.
-            source = self._source_df(specs[0].source)
-            src_keys = _equi_source_keys(specs[0].on, specs[0].t_alias,
-                                         specs[0].s_alias)
-            # emptiness from commit metadata + parquet footers when
-            # provable (r13) — skips a take(1) probe JOB per load on
-            # the serving path; None falls back to the probe
-            empty = tbl.is_provably_empty()
-            if empty is None:
-                empty = not state.take(1)
-            if empty:
-                # empty target (the initial load): the update pass is a
-                # no-op and every source row is unmatched, so the pair
-                # reduces to the insert-only fast path — no outer join,
-                # no window, no uniqueness gate (duplicates all insert,
-                # exactly the sequential result)
-                res = apply_merge(state, source, specs[1],
-                                  check_cardinality=False)
-                cl = specs[1].clauses[0]
-                pin: list = []
-                if ident and ident in state.columns and (
-                        cl.insert_cols is None
-                        or ident not in cl.insert_cols):
-                    res = _assign_identity_reserved(
-                        tbl, res, state, ident, src_keys, info, pin)
-                try:
-                    return tbl.overwrite(
-                        res, operation="MERGE",
-                        extra_meta={"fused": 2, **(extra_meta or {})})
-                finally:
-                    for df in pin:
-                        df.unpersist()
-            def _dupes() -> int:
-                return (source.groupBy(*src_keys)
-                        .agg(F.count(F.lit(1)).alias("__n"))
-                        .filter(F.col("__n") > 1).limit(1).count())
-            cl = specs[1].clauses[0]
-            needs_ident = bool(
-                ident and ident in state.columns
-                and (cl.insert_cols is None
-                     or ident not in cl.insert_cols))
-            if not needs_ident:
-                # overlap the uniqueness gate with the fused write
-                # (guide §2.6: independent jobs back-fill each other's
-                # task tails): the gate joins at overwrite's
-                # pre-publish hook, so a duplicate-key source aborts
-                # BEFORE anything becomes visible and falls back to
-                # the sequential composition exactly as the serial
-                # probe did. Identity assignment is excluded — its
-                # reservation commits are side effects that must not
-                # run speculatively.
-                from concurrent.futures import ThreadPoolExecutor
-                res = apply_merge_fused_pair(state, source, *specs)
-                with ThreadPoolExecutor(1) as _pool:
-                    fut = _pool.submit(_dupes)
-
-                    def _gate():
-                        if fut.result():
-                            raise _FusedSourceDupes()
+            # the uniqueness gate and the fused write (or the empty-
+            # target insert) read one materialized source
+            with materialized_source(
+                    self._source_df(specs[0].source)) as source:
+                src_keys = _equi_source_keys(specs[0].on, specs[0].t_alias,
+                                             specs[0].s_alias)
+                # emptiness from commit metadata + parquet footers when
+                # provable (r13) — skips a take(1) probe JOB per load on
+                # the serving path; None falls back to the probe
+                empty = tbl.is_provably_empty()
+                if empty is None:
+                    empty = not state.take(1)
+                if empty:
+                    # empty target (the initial load): the update pass is a
+                    # no-op and every source row is unmatched, so the pair
+                    # reduces to the insert-only fast path — no outer join,
+                    # no window, no uniqueness gate (duplicates all insert,
+                    # exactly the sequential result)
+                    res = apply_merge(state, source, specs[1],
+                                      check_cardinality=False)
+                    cl = specs[1].clauses[0]
+                    pin: list = []
+                    if ident and ident in state.columns and (
+                            cl.insert_cols is None
+                            or ident not in cl.insert_cols):
+                        res = _assign_identity_reserved(
+                            tbl, res, state, ident, src_keys, info, pin)
                     try:
                         return tbl.overwrite(
                             res, operation="MERGE",
-                            extra_meta={"fused": 2,
-                                        **(extra_meta or {})},
-                            pre_publish=_gate)
-                    except _FusedSourceDupes:
-                        pass    # sequential composition below
-            elif not _dupes():
-                res = apply_merge_fused_pair(state, source, *specs)
-                pin: list = []
-                res = _assign_identity_reserved(
-                    tbl, res, state, ident, src_keys, info, pin)
-                try:
-                    return tbl.overwrite(
-                        res, operation="MERGE",
-                        extra_meta={"fused": 2, **(extra_meta or {})})
-                finally:
-                    for df in pin:
-                        df.unpersist()
+                            extra_meta={"fused": 2, **(extra_meta or {})})
+                    finally:
+                        for df in pin:
+                            df.unpersist()
+                def _dupes() -> int:
+                    return (source.groupBy(*src_keys)
+                            .agg(F.count(F.lit(1)).alias("__n"))
+                            .filter(F.col("__n") > 1).limit(1).count())
+                cl = specs[1].clauses[0]
+                needs_ident = bool(
+                    ident and ident in state.columns
+                    and (cl.insert_cols is None
+                         or ident not in cl.insert_cols))
+                if not needs_ident:
+                    # overlap the uniqueness gate with the fused write
+                    # (guide §2.6: independent jobs back-fill each other's
+                    # task tails): the gate joins at overwrite's
+                    # pre-publish hook, so a duplicate-key source aborts
+                    # BEFORE anything becomes visible and falls back to
+                    # the sequential composition exactly as the serial
+                    # probe did. Identity assignment is excluded — its
+                    # reservation commits are side effects that must not
+                    # run speculatively.
+                    from concurrent.futures import ThreadPoolExecutor
+                    res = apply_merge_fused_pair(state, source, *specs)
+                    with ThreadPoolExecutor(1) as _pool:
+                        fut = _pool.submit(_dupes)
+
+                        def _gate():
+                            if fut.result():
+                                raise _FusedSourceDupes()
+                        try:
+                            return tbl.overwrite(
+                                res, operation="MERGE",
+                                extra_meta={"fused": 2,
+                                            **(extra_meta or {})},
+                                pre_publish=_gate)
+                        except _FusedSourceDupes:
+                            pass    # sequential composition below
+                elif not _dupes():
+                    res = apply_merge_fused_pair(state, source, *specs)
+                    pin: list = []
+                    res = _assign_identity_reserved(
+                        tbl, res, state, ident, src_keys, info, pin)
+                    try:
+                        return tbl.overwrite(
+                            res, operation="MERGE",
+                            extra_meta={"fused": 2, **(extra_meta or {})})
+                    finally:
+                        for df in pin:
+                            df.unpersist()
         chain_pin: list = []    # persisted merge results, freed post-commit
         for spec in specs:
             source = self._source_df(spec.source)

@@ -38,38 +38,49 @@ _OP = st.one_of(
 )
 
 
-def _batch(spark, lo, hi, val=None):
+# partition values: characters Spark hive-escapes in dir names (: % / =)
+# next to ones it writes raw (space, unicode)
+_LABELS = st.lists(
+    st.text(alphabet=[":", "%", "/", "=", " ", "ü", "€", "p"],
+            min_size=1, max_size=3),
+    min_size=3, max_size=3, unique=True)
+
+
+def _batch(spark, labels, lo, hi, val=None):
     return spark.range(lo, hi).select(
         F.col("id"),
-        F.concat(F.lit("p"), F.col("id") % 3).alias("pt"),
+        F.element_at(F.array(*[F.lit(x) for x in labels]),
+                     (F.col("id") % 3 + 1).cast("int")).alias("pt"),
         (F.lit(val).cast("long") if val is not None
          else F.col("id") * 2).alias("val"))
 
 
 @settings(max_examples=5, deadline=None, derandomize=True,
           suppress_health_check=list(HealthCheck))
-@given(st.lists(_OP, min_size=3, max_size=6))
-def test_random_commit_sequences_roundtrip(spark, ops):
+@given(st.lists(_OP, min_size=3, max_size=6), _LABELS)
+def test_random_commit_sequences_roundtrip(spark, ops, labels):
     root = tempfile.mkdtemp(prefix="ice_prop_")
     try:
         t = ManagedTable(spark, os.path.join(root, "t"),
                          partition_by=("pt",))
-        t.overwrite(_batch(spark, 0, 30))
+        t.overwrite(_batch(spark, labels, 0, 30))
         next_lo = 30
         for kind, arg in ops:
             if kind == "append":
-                t = t.append(_batch(spark, next_lo, next_lo + 5 + arg))
+                t = t.append(_batch(spark, labels, next_lo,
+                                    next_lo + 5 + arg))
                 next_lo += 5 + arg
             elif kind == "upsert":
                 lo = 2 * arg
-                t = t.upsert_mor(_batch(spark, lo, lo + 6, 900 + arg),
-                                 key_cols=("id",))
+                t = t.upsert_mor(
+                    _batch(spark, labels, lo, lo + 6, 900 + arg),
+                    key_cols=("id",))
             elif kind == "delete":
                 lo = 3 * arg
                 t = t.delete_mor(F.col("id").between(lo, lo + 4),
                                  key_cols=("id",))
             elif kind == "update_part":
-                t = t.update(F.col("pt") == f"p{arg}",
+                t = t.update(F.col("pt") == labels[arg],
                              {"val": F.lit(-1 - arg)},
                              stable_partitions=True)
             elif kind == "overwrite":

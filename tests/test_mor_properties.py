@@ -22,6 +22,13 @@ from pyspark.sql import functions as F
 from tb_lakehouse_enhanced_spark.sources.managed import ManagedTable
 
 KEYS = list(range(8))
+# partition values: ints, or strings of characters Spark hive-escapes
+# in dir names (: % / =) next to ones it writes raw (space, unicode)
+PART_LABELS = st.one_of(
+    st.just([0, 1, 2]),
+    st.lists(st.text(alphabet=[":", "%", "/", "=", " ", "ü", "€", "a"],
+                     min_size=1, max_size=3),
+             min_size=3, max_size=3, unique=True))
 
 cmd = st.one_of(
     st.tuples(st.just("overwrite"),
@@ -95,9 +102,9 @@ def test_mor_sequences_match_dict_model(spark, tmp_path_factory, cmds):
 
 @settings(max_examples=5, deadline=None,
           suppress_health_check=list(HealthCheck))
-@given(cmds=st.lists(cmd, min_size=2, max_size=7))
+@given(cmds=st.lists(cmd, min_size=2, max_size=7), labels=PART_LABELS)
 def test_mor_sequences_partitioned_stable_carry(spark, tmp_path_factory,
-                                                cmds):
+                                                cmds, labels):
     """Same dict-model drive, but on a PARTITIONED table with a stable
     key->partition mapping and ``stable_partitions=True`` DML — the
     merge-on-read CARRY path: copy-on-write UPDATE/DELETE stay
@@ -108,10 +115,12 @@ def test_mor_sequences_partitioned_stable_carry(spark, tmp_path_factory,
     path = str(tmp_path_factory.mktemp("morprop_pt") / "t")
     t = ManagedTable(spark, path, partition_by=("pt",))
 
+    pt_type = "int" if isinstance(labels[0], int) else "string"
+
     def _pdf(d):
         return spark.createDataFrame(
-            [(k, k % 3, v) for k, v in sorted(d.items())],
-            "k int, pt int, v int")
+            [(k, labels[k % 3], v) for k, v in sorted(d.items())],
+            f"k int, pt {pt_type}, v int")
 
     t.overwrite(_pdf({0: 0, 1: 1, 2: 2}))
     model = {0: 0, 1: 1, 2: 2}
@@ -148,7 +157,7 @@ def test_mor_sequences_partitioned_stable_carry(spark, tmp_path_factory,
         snaps[t.current_version()] = dict(model)
         assert read_state() == model, f"after {op}({arg})"
         got_pt = {r["k"]: r["pt"] for r in t.read().collect()}
-        assert all(got_pt[k] == k % 3 for k in got_pt)   # partition stable
+        assert all(got_pt[k] == labels[k % 3] for k in got_pt)  # stable
 
     for v, snap in snaps.items():
         assert read_state(version=v) == snap, f"time travel v{v}"

@@ -65,6 +65,72 @@ def test_merge_into_escaped_partitions(spark, table):
     assert _visible(table) == sorted((k, r, v + 7) for k, r, v in ROWS)
 
 
+def test_mirrors_of_escaped_partitions(spark, tmp_base):
+    """The Delta and Iceberg mirrors carry the unescaped partition value
+    and Delta action paths are URIs, so both external readers return
+    ``read()``'s rows, after a full write and after a partition-scoped
+    rewrite (whose removes must name the escaped dirs' adds)."""
+    from tb_lakehouse_enhanced_spark.sources.deltaread import read_delta
+    from tb_lakehouse_enhanced_spark.sources.iceberg import read_iceberg
+    mt = ManagedTable(spark, f"{tmp_base}/m", partition_by=("region",))
+    values = ["a:b", "50%", "x y", "plain"]
+    mt.overwrite(spark.createDataFrame(
+        [(i, r, i) for i, r in enumerate(values)], SCHEMA))
+    for step in ("overwrite", "update"):
+        want = _visible(mt)
+        for reader in (read_delta, read_iceberg):
+            got = sorted(tuple(r) for r in reader(spark, mt.path)
+                         .select("k", "region", "v").collect())
+            assert got == want, (step, reader.__name__)
+        mt.update(F.col("region").isin("a:b", "50%"),
+                  {"v": F.col("v") + 1000})
+
+
+def test_update_of_partition_only_in_deltas(spark, tmp_base):
+    """A merge-on-read upsert opens partition pt=7, which no base file
+    lists; a partition-scoped update of pt=7 must still apply."""
+    mt = ManagedTable(spark, f"{tmp_base}/d", partition_by=("pt",))
+    mt.overwrite(spark.createDataFrame(
+        [(k, k % 3, k) for k in range(6)], "k long, pt int, v long"))
+    mt.upsert_mor(spark.createDataFrame([(70, 7, 1)],
+                                        "k long, pt int, v long"), ("k",))
+    v = mt.current_version()
+    mt.update(F.col("pt") == 7, {"v": F.col("v") + 100},
+              stable_partitions=True)
+    assert mt.current_version() == v + 1
+    got = {r["k"]: r["v"] for r in mt.read().collect()}
+    assert got == {**{k: k for k in range(6)}, 70: 101}
+
+
+def test_seeded_partition_types_match_inference(spark, tmp_base):
+    """The root schema seeded at write time equals what Spark's
+    partition inference reads back; a column whose values it cannot
+    type leaves the root to inference (no seed)."""
+    def _seed(name, cols):
+        names = list(cols)
+        n = max(len(v) for v in cols.values())
+        mt = ManagedTable(spark, f"{tmp_base}/{name}",
+                          partition_by=tuple(names))
+        mt.overwrite(spark.createDataFrame(
+            [(i, *[cols[c][i % len(cols[c])] for c in names])
+             for i in range(n)],
+            "k long, " + ", ".join(f"{c} string" for c in names)))
+        root = mt._commit(mt.current_version())["dir"]
+        return (spark._tb_root_schema_cache.get((mt.path, root)),
+                os.path.join(mt.path, root))
+
+    seeded, root = _seed("typed", {"i": ["7", "-3", "007", None],
+                                   "l": ["1", str(2 ** 40)],
+                                   "s": ["a", None]})
+    inferred = spark.read.parquet(root).schema
+    assert [(f.name, f.dataType) for f in seeded.fields] == \
+        [(f.name, f.dataType) for f in inferred.fields]
+    assert [seeded[c].dataType.simpleString() for c in "ils"] == \
+        ["int", "bigint", "string"]
+    for name, values in (("frac", ["1", "1.5"]), ("mixed", ["a", "1"])):
+        assert _seed(name, {"p": values})[0] is None, name
+
+
 def test_read_of_many_partition_dirs_launches_no_job(spark, tmp_base):
     """A materialized version with more leaf dirs than Spark's default
     parallel-listing threshold (32) is listed on the driver: building
@@ -74,10 +140,8 @@ def test_read_of_many_partition_dirs_launches_no_job(spark, tmp_base):
                  .select(F.col("id").alias("k"), (F.col("id") % 40).alias("p")))
     assert len([d for d in os.listdir(mt._version_dir(mt.current_version()))
                 if d.startswith("p=")]) == 40
-    # the first read after a partitioned write infers the root schema
-    # from a footer (a one-task job, cached per process); count the
-    # steady-state read only
-    mt.read()
+    # the write seeds the root schema (integer partition values), so
+    # even the first read runs no footer-inference job
     sc = spark.sparkContext
     group = "partition-dirs-read"
     sc.setJobGroup(group, group)

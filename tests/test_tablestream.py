@@ -35,11 +35,14 @@ def _drain(spark, tmp_path, table_path, out_name, **opts):
 
 def test_stream_serves_snapshot_then_appends(spark, tmp_base, tmp_path):
     t = _mk(spark, tmp_base)
-    t.append(spark.createDataFrame([(3, "a", 30.0)], ["id", "k", "v"]))
+    t.append(spark.createDataFrame([(3, "a", 30.0), (4, "a:b", 40.0)],
+                                   ["id", "k", "v"]))
     got = _drain(spark, tmp_path, t.path, "ts_snap")
-    assert _rows(got) == {(1, "a", 10.0), (2, "b", 20.0), (3, "a", 30.0)}
-    # partition column values recovered from the hive paths
-    assert {r["k"] for r in got.collect()} == {"a", "b"}
+    assert _rows(got) == {(1, "a", 10.0), (2, "b", 20.0), (3, "a", 30.0),
+                          (4, "a:b", 40.0)}
+    # partition column values recovered from the hive paths, hive
+    # escapes (k=a%3Ab) decoded
+    assert {r["k"] for r in got.collect()} == {"a", "b", "a:b"}
 
 
 def test_stream_exactly_once_across_restart(spark, tmp_base, tmp_path):
