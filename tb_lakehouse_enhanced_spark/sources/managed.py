@@ -2100,12 +2100,15 @@ class ManagedTable:
 
     def _physical_struct(self, files: list[tuple[str, str]]):
         """Spark StructType of the PHYSICAL layout from one parquet
-        footer plus the directory-encoded partition columns (typed by
-        value inference: all-int -> long, else string — partition
-        values are strings in the log either way)."""
+        footer plus the directory-encoded partition columns (long when
+        every value is an integer that fits int64 — the range rule of
+        ``_inferred_partition_type`` — else string: partition values
+        are strings in the log either way, and the Iceberg bounds of a
+        long column pack into 8 bytes)."""
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
         from pyspark.sql.types import (
+            IntegerType,
             LongType,
             StringType,
             StructField,
@@ -2127,9 +2130,9 @@ class ManagedTable:
         for pcol in self.partition_by:
             if pcol in seen:
                 continue
-            vals = [x for x in part_vals.get(pcol, []) if x is not None]
-            is_int = bool(vals) and all(
-                x.lstrip("-").isdigit() for x in vals)
+            vals = {x for x in part_vals.get(pcol, []) if x is not None}
+            is_int = isinstance(_inferred_partition_type(vals),
+                                (IntegerType, LongType))
             struct = struct.add(StructField(
                 pcol, LongType() if is_int else StringType(), True))
         return struct
@@ -4932,7 +4935,7 @@ class ManagedTable:
                 f"rewrite. Materialize the map once — compact(), or "
                 f"overwrite() backfilling the partition column — then "
                 f"retry.")
-        if not self.partition_by:
+        if not self.partition_by or (cur >= 0 and not self._laid_out(cur)):
             if df is None:
                 df = self.read()
             return self.overwrite(rewrite_fn(df), operation, cdc=cdc)
@@ -5300,9 +5303,7 @@ class ManagedTable:
             # scoped DML straight through an ALTER, no materialize
             rewritten = rewritten.select(
                 *[F.col(lg).alias(p) for p, lg, _t in cmap])
-        touched_rel = {
-            "/".join(f"{c}={self._hive_val(r[c])}" for c in pb)
-            for r in touched}
+        touched_rel = self._rels_of(touched, pb)
         carry_fut = None
         if mor:
             # the carry subtraction's writes are independent of the
@@ -5310,15 +5311,14 @@ class ManagedTable:
             # concurrent jobs back-fill each other's task tails; since
             # r13 the carry reads only raw base/delta files, so the
             # two never race to materialize a shared slice). The
-            # touched partition identities ride along (r14) so the
-            # size-gated driver fast path can run the subtraction with
-            # zero Spark jobs.
+            # touched partition rows ride along so the size-gated
+            # driver carry can run the subtraction with zero Spark
+            # jobs.
             from concurrent.futures import ThreadPoolExecutor
             carry_pool = ThreadPoolExecutor(max_workers=1)
             carry_fut = carry_pool.submit(
                 self._carry_mor_minus_touched, meta0, member, v,
-                touched_rel=touched_rel,
-                touched_vals={tuple(r[c] for c in pb) for r in touched})
+                touched=touched)
         (self._stamp_field_ids(rewritten, cmap).write.mode("overwrite")
          .partitionBy(*pb).parquet(vdir))
         # hardlink every untouched LIVE file from the old snapshot
@@ -5356,6 +5356,17 @@ class ManagedTable:
                 bool(bdf.filter(condition).limit(1).count()),
             no_retry=snapshot is not None or mor)
 
+    def _laid_out(self, v: int) -> bool:
+        """True when every live base file of version ``v`` sits under
+        the full hive path of the CURRENT partition layout. A RESTORE
+        of a version written before CREATE OR REPLACE changed the
+        layout revives files like ``p=0/f.parquet`` under layout
+        ``(p, q)``: partition-scoped DML can neither prune nor
+        hardlink those by leaf dir, so such versions rewrite whole."""
+        pb = list(self.partition_by)
+        return all(list(self._partition_values(rel)) == pb
+                   for rel in self._live_files(v))
+
     def _map_partition_scoped_ok(self, cmap: list) -> bool:
         """True when a live column map composes with partition-scoped
         rewrites: every entry carries a physical name (no legacy
@@ -5387,8 +5398,8 @@ class ManagedTable:
         INT64, changing the physical type under the session's
         nanosAsLong conf — nor decimals/binary/nested). ``compared``
         columns (partition membership, key identity) additionally
-        exclude floats: equality must match Spark's eqNullSafe via
-        plain Python ``==``."""
+        exclude floats: Arrow's ``equal`` and join keys treat NaN and
+        -0.0 unlike Spark's eqNullSafe and join."""
         import pyarrow as pa
         t = field.type
         if pa.types.is_integer(t) or pa.types.is_string(t) \
@@ -5398,23 +5409,29 @@ class ManagedTable:
         return (not compared) and pa.types.is_floating(t)
 
     def _carry_driver_fast(self, meta0: dict, v: int,
-                           touched_rel: set[str],
-                           touched_vals: set[tuple]) -> dict | None:
-        """Driver-side carry subtraction (r14, guide §1.2/§5): the
-        carry's three tiny Spark jobs (touched-key union, per-delta
-        filter-write, per-tombstone anti-join-write) each cost a full
-        plan/schedule cycle to move kilobytes — the same
-        jobs-for-metadata-work disease the footer-analyze fix removed.
-        When the MOR sidecars plus the touched partitions' base files
-        are provably small (size/count gates above) and every involved
-        column round-trips through Arrow byte-identically, compute the
-        identical subtraction with pyarrow on the driver: zero Spark
-        jobs. Returns None — caller falls back to the Spark path —
-        when any gate fails or anything unexpected is hit; fallback is
-        always sound (same inputs, same dirs, overwrite semantics)."""
+                           touched: list) -> dict | None:
+        """Driver-side carry subtraction: the same result as the Spark
+        carry below, computed with pyarrow (Acero) on the driver — zero
+        Spark jobs instead of three tiny ones (touched-key union,
+        per-delta filter-write, per-tombstone anti-join-write) that
+        each cost a full plan/schedule cycle to move kilobytes.
+
+        Each sidecar dir reads as one table. Delta rows outside the
+        touched partitions stay (null-safe partition membership, like
+        the Spark path's ``member``); tombstone rows stay when their key
+        is absent from the touched keys (the touched partitions' base
+        files plus their delta rows), via a left anti join — null-UNSAFE
+        exactly like Spark's ``left_anti``, so a NULL-keyed tombstone is
+        always kept. Returns None — caller runs the Spark path — on a
+        gate miss: the inputs exceed the size/count bounds, a key is a
+        partition column, a file lacks a needed column, a column does
+        not round-trip through Arrow (``_carry_arrow_ok``), or the key
+        types disagree across files. Anything else raises and fails
+        the statement before publish."""
         import uuid as _uuid
 
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
         pb = list(self.partition_by)
         keys = list(meta0["tombstone_keys"])
@@ -5422,121 +5439,101 @@ class ManagedTable:
         pkeys = [phys_of.get(k, k) for k in keys]
         if set(pkeys) & set(pb):
             # a key doubling as a partition column lives in base file
-            # PATHS, not file columns — the pruned reads below could
-            # not see it
+            # PATHS, not file columns
             return None
         deltas = list(meta0.get("deltas") or [])
         tombs = list(meta0.get("tombstones") or [])
-        # touched base files from the live list's hive segments (the
-        # same dirname membership _link_untouched complements)
-        base_files = []
-        for rel, full in self._files_rel(meta0["version"]).items():
-            if os.path.dirname(rel) in touched_rel:
-                base_files.append(full)
-        state_files = []
-        for d in deltas + tombs:
-            droot = os.path.join(self.path, d)
-            fs = sorted(os.path.join(droot, fn)
-                        for fn in os.listdir(droot)
-                        if fn.endswith(".parquet"))
-            state_files.append((d, fs))
-        all_files = base_files + [f for _d, fs in state_files for f in fs]
-        if len(all_files) > self.CARRY_DRIVER_MAX_FILES:
-            return None
-        if sum(os.path.getsize(f) for f in all_files) \
+        # touched base files by leaf dir, the membership _link_untouched
+        # complements
+        touched_rel = self._rels_of(touched, pb)
+        base_files = [full for rel, full in
+                      self._files_rel(meta0["version"]).items()
+                      if os.path.dirname(rel) in touched_rel]
+        sidecars = {d: os.path.join(self.path, d) for d in deltas + tombs}
+        all_files = base_files + [
+            os.path.join(dp, fn) for dp in sidecars.values()
+            for fn in os.listdir(dp) if fn.endswith(".parquet")]
+        if len(all_files) > self.CARRY_DRIVER_MAX_FILES \
+                or sum(map(os.path.getsize, all_files)) \
                 > self.CARRY_DRIVER_MAX_BYTES:
             return None
-
-        def _member_mask(table):
-            """Boolean list: row's partition tuple in touched_vals
-            (typed, null-safe via plain Python equality)."""
-            cols = [table.column(c).to_pylist() for c in pb]
-            return [tuple(col[i] for col in cols) in touched_vals
-                    for i in range(table.num_rows)]
 
         # touched keys = keys PRESENT in the touched partitions'
         # base/delta rows (raw, no LWW resolve — see the caller's
         # soundness note)
-        touched_keys: set[tuple] = set()
+        key_parts = []
         for f in base_files:
-            sch = pq.read_schema(f)
-            if any(k not in sch.names for k in pkeys):
+            pf = pq.ParquetFile(f)
+            if not set(pkeys) <= set(pf.schema_arrow.names):
                 return None     # file predates a key column
-            if not all(self._carry_arrow_ok(sch.field(k), True)
-                       for k in pkeys):
+            key_parts.append(pf.read(columns=pkeys))
+        tables = {}
+        for d, dpath in sidecars.items():
+            t = pq.read_table(dpath)
+            need = pkeys + pb if d in deltas else pkeys
+            if not set(need) <= set(t.schema.names) \
+                    or not all(self._carry_arrow_ok(f, f.name in need)
+                               for f in t.schema):
                 return None
-            t = pq.read_table(f, columns=pkeys)
-            cols = [t.column(k).to_pylist() for k in pkeys]
-            touched_keys.update(zip(*cols) if cols else ())
-        delta_tables = {}
+            tables[d] = t
+
+        def _key_types(t):
+            return [t.schema.field(k).type for k in pkeys]
+        if tombs and any(
+                _key_types(t) != _key_types(tables[tombs[0]])
+                for t in key_parts + list(tables.values())):
+            return None         # the anti join needs equal key types
+
+        def _touched_mask(t):
+            """Null-safe membership of each row's partition values in
+            ``touched`` — Spark's ``member`` (OR of AND of
+            ``eqNullSafe``) as Arrow compute."""
+            def _eq(c, val):
+                if val is None:
+                    return pc.is_null(t[c])
+                return pc.fill_null(pc.equal(
+                    t[c], pa.scalar(val, t.schema.field(c).type)), False)
+            return reduce(pc.or_, (reduce(pc.and_, (_eq(c, r[c])
+                                                    for c in pb))
+                                   for r in touched))
+
+        kept = {}
         for d in deltas:
-            fs = dict(state_files)[d]
-            parts = []
-            for f in fs:
-                t = pq.read_table(f)
-                if any(c not in t.schema.names for c in pb + pkeys):
-                    return None
-                for fld in t.schema:
-                    if not self._carry_arrow_ok(
-                            fld, fld.name in pb or fld.name in pkeys):
-                        return None
-                parts.append(t)
-            if not parts:
-                return None
-            t = pa.concat_tables(parts) if len(parts) > 1 else parts[0]
-            mask = _member_mask(t)
-            kcols = [t.column(k).to_pylist() for k in pkeys]
-            touched_keys.update(
-                tuple(col[i] for col in kcols)
-                for i in range(t.num_rows) if mask[i])
-            delta_tables[d] = t.filter(
-                pa.array([not m for m in mask], type=pa.bool_()))
-        tomb_tables = {}
+            t = tables[d]
+            mask = _touched_mask(t)
+            key_parts.append(t.filter(mask).select(pkeys))
+            kept[d] = t.filter(pc.invert(mask))
+        if tombs:
+            # led by an empty tombstone slice: a touched set with no
+            # rows still types the join (nullability may differ)
+            touched_keys = pa.concat_tables(
+                [tables[tombs[0]].select(pkeys).slice(0, 0)] + key_parts,
+                promote_options="default")
         for tb in tombs:
-            fs = dict(state_files)[tb]
-            parts = []
-            for f in fs:
-                t = pq.read_table(f)
-                if any(k not in t.schema.names for k in pkeys):
-                    return None
-                for fld in t.schema:
-                    if not self._carry_arrow_ok(fld, True):
-                        return None
-                parts.append(t)
-            if not parts:
-                return None
-            t = pa.concat_tables(parts) if len(parts) > 1 else parts[0]
-            kcols = [t.column(k).to_pylist() for k in pkeys]
-            keep = [tuple(col[i] for col in kcols) not in touched_keys
-                    for i in range(t.num_rows)]
-            tomb_tables[tb] = t.filter(pa.array(keep, type=pa.bool_()))
-        out: dict = {"tombstone_keys": keys}
-        new_deltas, new_tombs = [], []
-        for d, kept in list(delta_tables.items()) \
-                + list(tomb_tables.items()):
-            name = f"{d}_rw{v}"
-            dpath = os.path.join(self.path, name)
+            t = tables[tb]
+            # the join drops field metadata (the PARQUET:field_id
+            # stamps): cast back to the file's own schema
+            kept[tb] = t.join(touched_keys, pkeys,
+                              join_type="left anti") \
+                .select(t.schema.names).cast(t.schema)
+        for d, t in kept.items():
+            dpath = os.path.join(self.path, f"{d}_rw{v}")
             if os.path.isdir(dpath):        # stale attempt: replace
                 shutil.rmtree(dpath)
             os.makedirs(dpath)
-            pq.write_table(
-                kept, os.path.join(
-                    dpath,
-                    f"part-00000-{_uuid.uuid4().hex}-c000"
-                    f".snappy.parquet"),
-                compression="snappy")
-            (new_deltas if d in delta_tables else new_tombs).append(name)
-        if new_deltas:
-            out["deltas"] = new_deltas
-        if new_tombs:
-            out["tombstones"] = new_tombs
+            pq.write_table(t, os.path.join(
+                dpath, f"part-00000-{_uuid.uuid4().hex}-c000"
+                       f".snappy.parquet"), compression="snappy")
+        out: dict = {"tombstone_keys": keys}
+        if deltas:
+            out["deltas"] = [f"{d}_rw{v}" for d in deltas]
+        if tombs:
+            out["tombstones"] = [f"{tb}_rw{v}" for tb in tombs]
         return out
 
     def _carry_mor_minus_touched(self, meta0: dict, member,
                                  v: int, touched_content=None,
-                                 touched_rel: set[str] | None = None,
-                                 touched_vals: set[tuple] | None = None
-                                 ) -> dict:
+                                 touched: list | None = None) -> dict:
         """Carry a parent commit's MOR state forward across a
         partition-scoped rewrite, MINUS the touched partitions.
 
@@ -5580,16 +5577,11 @@ class ManagedTable:
         ALTER -> MOR sync -> partition-scoped DML no longer
         materializes (VERDICT r10 #1)."""
         from pyspark.sql import functions as F  # noqa: F401
-        if touched_content is None and touched_rel is not None \
-                and touched_vals is not None:
-            # size/type-gated driver-side subtraction (r14): identical
-            # result, zero Spark jobs — see _carry_driver_fast. Any
-            # gate failure or surprise falls through to the Spark path.
-            try:
-                fast = self._carry_driver_fast(
-                    meta0, v, touched_rel, touched_vals)
-            except Exception:
-                fast = None
+        if touched_content is None and touched is not None:
+            # size/type-gated driver-side subtraction: identical result,
+            # zero Spark jobs — see _carry_driver_fast. A gate miss
+            # runs the Spark path below; an error fails the statement.
+            fast = self._carry_driver_fast(meta0, v, touched)
             if fast is not None:
                 return fast
         keys = list(meta0["tombstone_keys"])
@@ -5895,7 +5887,8 @@ class ManagedTable:
             stable_partitions = False
         cmap = self._live_map(parent, self.current_version())
         if not self.partition_by or (mor and not stable_partitions) \
-                or (cmap and not self._map_partition_scoped_ok(cmap)):
+                or (cmap and not self._map_partition_scoped_ok(cmap)) \
+                or not self._laid_out(self.current_version()):
             # non-identity-mapped partition columns (legacy None-phys
             # maps upgrade in place): materialize the map in this
             # rewrite. A USABLE live map stays partition-scoped below
@@ -5945,9 +5938,7 @@ class ManagedTable:
                                      for p, lg, _t in cmap])
         self._stamp_field_ids(merged, cmap).write.mode("overwrite") \
             .partitionBy(*pb).parquet(vdir)
-        touched_rel = {
-            "/".join(f"{c}={self._hive_val(r[c])}" for c in pb)
-            for r in touched}
+        touched_rel = self._rels_of(touched, pb)
         self._link_untouched(self._files_rel(cur), touched_rel, vdir)
         # after the hardlink loop — see _partial_rewrite's ordering note
         self._ensure_readable(vdir, merged.schema)

@@ -671,3 +671,16 @@ def test_drop_column_roundtrip(spark, tmp_base):
     _check(spark, t, "post-readd")
     readd = read_iceberg(spark, t.path)
     assert readd.filter(F.col("val").isNotNull()).count() == 0
+
+
+def test_partition_values_beyond_int64_mirror_as_string(spark, tmp_base):
+    """A partition column whose integral values exceed int64 mirrors as
+    an Iceberg string: typed long, its bounds would not pack into 8
+    bytes and the commit would raise."""
+    big = str(2 ** 70)
+    t = ManagedTable(spark, os.path.join(tmp_base, "big"),
+                     partition_by=("p",))
+    t.overwrite(spark.createDataFrame([(1, "1"), (2, big)],
+                                      "k long, p string"))
+    got = {(r["k"], r["p"]) for r in read_iceberg(spark, t.path).collect()}
+    assert got == {(1, "1"), (2, big)}

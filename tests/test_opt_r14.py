@@ -7,32 +7,55 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tb_lakehouse_enhanced_spark.sources.managed import ManagedTable
 
 
-def _mor_lifecycle(spark, root: str, force_spark_carry: bool):
-    """overwrite -> upsert_mor -> delete_mor -> partition-scoped UPDATE
-    (the carry trigger), on a small partitioned table."""
+# case -> (partition columns as expressions over ``id``, the UPDATE
+# condition that picks the touched partitions); built lazily, a Column
+# needs the session
+_CASES = {
+    "int_partition": lambda: ({"pt": F.col("id") % 4}, F.col("pt") == 1),
+    # a tombstoned (k, NULL) key also present in the touched partition:
+    # Spark's null-unsafe anti join keeps that tombstone
+    "null_key_component": lambda: (
+        {"pt": F.col("id") % 4}, F.col("pt") == 1),
+    "escaped_string_partition": lambda: (
+        {"pt": F.element_at(F.array(*map(F.lit, ("a:b", "x y", "p"))),
+                            (F.col("id") % 3 + 1).cast("int"))},
+        F.col("pt").isin("a:b", "x y")),
+    # touched (1, a) and (2, b) only: membership is per row, not the
+    # cross product of per-column value sets
+    "two_partition_columns": lambda: (
+        {"pt": F.col("id") % 4,
+         "qt": F.when(F.col("id") % 3 == 0, "a").otherwise("b")},
+        ((F.col("pt") == 1) & (F.col("qt") == "a"))
+        | ((F.col("pt") == 2) & (F.col("qt") == "b"))),
+}
+
+
+def _mor_table(spark, root: str, case: str):
+    """overwrite -> upsert_mor -> delete_mor on a small partitioned
+    table; returns it with the case's UPDATE condition."""
+    parts, cond = _CASES[case]()
+    sub = F.col("id") % 100
+    if case == "null_key_component":
+        sub = F.when(F.col("id") % 10 != 1, sub)    # k=121: (121, NULL)
     base = (spark.range(0, 300)
-            .select(F.col("id").alias("k"),
-                    (F.col("id") % 100).alias("sub"),
-                    (F.col("id") % 4).alias("pt"),
+            .select(F.col("id").alias("k"), sub.alias("sub"),
+                    *[e.alias(c) for c, e in parts.items()],
                     (F.col("id") * 2.0).alias("val"),
                     F.concat(F.lit("s"), F.col("id") % 5).alias("tag")))
     t = ManagedTable(spark, os.path.join(root, "t"),
-                     partition_by=("pt",))
-    if force_spark_carry:
-        t.CARRY_DRIVER_MAX_BYTES = 0
+                     partition_by=tuple(parts))
     t.overwrite(base)
     t.upsert_mor(base.filter(F.col("k") % 7 == 0)
                  .withColumn("val", F.col("val") + 100),
                  ("k", "sub"))
     t.delete_mor(F.col("k") % 11 == 0, key_cols=("k", "sub"))
-    t.update(F.col("pt") == 1, {"tag": F.lit("dml")},
-             stable_partitions=True)
-    return t
+    return t, cond
 
 
 def _sidecar_rows(t: ManagedTable, dirs) -> list:
@@ -44,32 +67,59 @@ def _sidecar_rows(t: ManagedTable, dirs) -> list:
             cols = sorted(tab.schema.names)
             out.extend(map(tuple, zip(
                 *[tab.column(c).to_pylist() for c in cols])))
-    return sorted(out)
+    return sorted(out, key=repr)
 
 
-def test_carry_driver_fast_matches_spark_path(spark, tmp_base):
+@pytest.mark.parametrize("case", list(_CASES))
+def test_carry_driver_fast_matches_spark_path(spark, tmp_base, case):
     """The pyarrow carry must be row-for-row identical to the Spark
-    carry: same carried delta/tombstone content, same preserved field
-    ids, same visible table."""
+    carry of the same MOR state (same carried delta/tombstone content,
+    preserved field ids) and launch no Spark job; the UPDATE it serves
+    leaves the expected visible table."""
+    from functools import reduce
+    from operator import and_, or_
+
     import pyarrow.parquet as pq
-    a = _mor_lifecycle(spark, os.path.join(tmp_base, "fast"), False)
-    b = _mor_lifecycle(spark, os.path.join(tmp_base, "ref"), True)
-    ma = a._commit(a.current_version())
-    mb = b._commit(b.current_version())
-    # the fast path actually ran: same carried dir families exist
-    assert bool(ma.get("deltas")) == bool(mb.get("deltas"))
-    assert bool(ma.get("tombstones")) == bool(mb.get("tombstones"))
+    t, cond = _mor_table(spark, tmp_base, case)
+    pb = list(t.partition_by)
+    cur = t.current_version()
+    meta0 = t._commit(cur)
+    before = t.read()
+    touched = before.filter(cond).select(*pb).distinct().collect()
+    member = reduce(or_, (reduce(and_, (F.col(c).eqNullSafe(F.lit(r[c]))
+                                        for c in pb)) for r in touched))
+    sc = spark.sparkContext
+
+    def _carry(group, v):
+        sc.setJobGroup(group, group)
+        try:
+            out = t._carry_mor_minus_touched(meta0, member, v,
+                                             touched=touched)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    fast, fast_jobs = _carry(f"carry-driver-{case}", cur + 1)
+    t.CARRY_DRIVER_MAX_BYTES = 0
+    ref, ref_jobs = _carry(f"carry-spark-{case}", cur + 2)
+    del t.CARRY_DRIVER_MAX_BYTES
+    assert fast_jobs == [] and ref_jobs != []
+    assert fast.get("deltas") and fast.get("tombstones")
     for k in ("deltas", "tombstones"):
-        assert _sidecar_rows(a, ma.get(k)) == _sidecar_rows(b, mb.get(k))
+        assert _sidecar_rows(t, fast[k]) == _sidecar_rows(t, ref[k])
     # field ids survive the pyarrow round trip
-    fa = glob.glob(os.path.join(a.path, ma["tombstones"][0],
+    fa = glob.glob(os.path.join(t.path, fast["tombstones"][0],
                                 "*.parquet"))[0]
     ids = [(f.metadata or {}).get(b"PARQUET:field_id")
            for f in pq.read_schema(fa)]
     assert all(i is not None for i in ids)
-    da = sorted(map(tuple, a.read().collect()))
-    db = sorted(map(tuple, b.read().collect()))
-    assert da == db and len(da) > 0
+    want = sorted(map(tuple, before.withColumn(
+        "tag", F.when(cond, "dml").otherwise(F.col("tag"))).collect()),
+        key=repr)
+    t.update(cond, {"tag": F.lit("dml")}, stable_partitions=True)
+    assert sorted(map(tuple, t.read().collect()), key=repr) == want
+    assert len(want) > 0
 
 
 def test_carry_driver_fast_gates_fall_back(spark, tmp_base):

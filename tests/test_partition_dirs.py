@@ -153,3 +153,34 @@ def test_read_of_many_partition_dirs_launches_no_job(spark, tmp_base):
         sc.setLocalProperty("spark.job.description", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     assert df.count() == 120
+
+
+def test_partition_scoped_dml_after_restore_across_layout_change(
+        spark, tmp_base):
+    """RESTORE of a version written under an earlier layout revives
+    files whose leaf dir lacks the current layout's segments
+    (``p=0/f.parquet`` under ``(p, q)``). A partition-scoped UPDATE on
+    it rewrites the table whole: by leaf dir it could neither hardlink
+    nor carry those files, and the version it published had
+    conflicting partition dirs."""
+    from tb_lakehouse_enhanced_spark.sqlfront import LakehouseSql
+    lake = LakehouseSql(spark, f"{tmp_base}/lake")
+    lake.sql("CREATE DATABASE stg")
+    lake.sql("CREATE TABLE stg.t (k BIGINT, p BIGINT, q STRING, v BIGINT) "
+             "PARTITIONED BY (p)")
+    lake.sql("INSERT INTO stg.t SELECT id, id % 2, "
+             "IF(id % 3 = 0, 'a', 'b'), id FROM range(24)")
+    t = lake.table("stg.t")
+    t.delete_mor(F.col("k") % 5 == 0, key_cols=("k",))
+    old = t.current_version()
+    lake.sql("CREATE OR REPLACE TABLE stg.t "
+             "(k BIGINT, p BIGINT, q STRING, v BIGINT) PARTITIONED BY (p, q)")
+    t = lake.table("stg.t")
+    t.restore(old)
+    t.update((F.col("p") == 0) & (F.col("q") == "a"),
+             {"v": F.col("v") + 1000}, stable_partitions=True)
+    want = sorted((k, k % 2, "a" if k % 3 == 0 else "b",
+                   k + 1000 if k % 6 == 0 else k)
+                  for k in range(24) if k % 5)
+    assert sorted(tuple(r) for r in
+                  t.read().select("k", "p", "q", "v").collect()) == want
